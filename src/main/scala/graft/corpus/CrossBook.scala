@@ -38,8 +38,9 @@ object CrossBook {
       .select(Seq(col("doc_id"), col("pos"), col("book"), col("node")) ++
         (if (mAll.columns.contains("entity_type"))
            Seq(col("entity_type")) else Nil): _*)
-    // pin only when the mention table is consumed more than once below:
-    // with an externally pinned cooc table (q37 — whose mention input is
+    // a pin pays only when a table is read more than once below, whatever
+    // its source (the same rule as Canonicalize.clusters): with an
+    // externally pinned cooc table (q37 — whose mention input is
     // the already-checkpointed linked stage) the only full pass left is
     // the `grouped` aggregate, and an eager checkpoint of the full table
     // would cost more than the single scan it saves (measured round-6:

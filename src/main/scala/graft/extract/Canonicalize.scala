@@ -250,14 +250,18 @@ object Canonicalize {
       pinnedAliasPairs: Option[DataFrame] = None,
       pinnedCoocEdges: Option[DataFrame] = None)
       : (DataFrame, Seq[ConnectedComponents.Superstep]) = {
-    // materialize the mention stage once — nodes and three of the four
-    // edge families all read it; the distinct node set is pinned once and
-    // shared between the edge builder and the CC seed. The pre-derived
-    // mkey rides along when the input has one (see keyOf).
-    val m = mentions
+    // the distinct node set is pinned once and shared between the edge
+    // derivation and the CC seed. The pre-derived mkey rides along when the
+    // input has one (see keyOf). A pin pays only when a table is read more
+    // than once below, whatever its source (the same rule as
+    // CrossBook.resolveAll): the node distinct always reads the mention
+    // projection, and the co-occurrence edges read it again unless the
+    // caller passes them pinned.
+    val mProj = mentions
       .select(Seq(col("doc_id"), col("pos"), col("text")) ++
         (if (mentions.columns.contains("mkey")) Seq(col("mkey")) else Nil): _*)
-      .localCheckpoint(true)
+    val m =
+      if (pinnedCoocEdges.isDefined) mProj else mProj.localCheckpoint(true)
     val nodes = m.select(keyOf(m).as("node"))
       .distinct().localCheckpoint(true)
     val e = checkpoints match {

@@ -2,21 +2,22 @@ package graft.extract
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Seeded entity linking (reference EntityDatabase.lookup / EntityResolver,
-  * extract/resolver.py:72-257), re-expressed as a broadcast-join cascade:
+  * extract/resolver.py:72-257): a three-tier lookup of the cleaned mention
+  * key against the seed registry —
   *
-  *   tier 1  exact key            — broadcast HASH join, conf 1.0
-  *   tier 2  article-stripped key — broadcast hash join, conf 0.95
-  *   tier 3  fuzzy                — broadcast candidate join blocked by
-  *           (first char, |len diff| <= 3), similarity = rapidfuzz-exact
-  *           indel ratio >= 0.85, conf = ratio (resolver.py:91-105)
+  *   tier 1  exact key            — conf 1.0
+  *   tier 2  article-stripped key — conf 0.95
+  *   tier 3  fuzzy                — candidates blocked by (first char,
+  *           |len diff| <= 3), similarity = rapidfuzz-exact indel ratio
+  *           >= 0.85, conf = ratio (resolver.py:91-105)
   *
-  * The build side (the seed registry) is tiny and broadcast, so the probe
-  * side never shuffles — head-entity skew (one protagonist dominating
-  * mention counts) cannot concentrate on a single reducer here. Downstream
-  * aggregations rely on partial aggregation + AQE; see graft.Spark.session.
+  * Linking runs through [[LocalLinker]] everywhere — a broadcast in-process
+  * index, so the mention side never shuffles and head-entity skew (one
+  * protagonist dominating mention counts) cannot concentrate on a single
+  * reducer. A broadcast-join cascade with the same tiers is the spec
+  * reference (LinkerSpec).
   */
 object Linker {
 
@@ -92,89 +93,40 @@ object Linker {
       .otherwise("unknown")
   }
 
-  /** The 3-tier lookup cascade over a DISTINCT key table
-    * (one column `mkey`): exact (conf 1.0) -> article-stripped (0.95) ->
-    * blocked fuzzy (conf = ratio >= 0.85). Returns exactly one verdict
-    * row per input key: (mkey, akey, canonical_id, canonical_name,
-    * entity_type, link_confidence) — null id/conf when unresolved.
-    */
-  private def linkKeys(
-      spark: SparkSession,
-      keys: DataFrame,
-      alias: DataFrame): DataFrame = {
-    val ratioUdf = udf((a: String, b: String) => indelRatio(a, b))
-    val k = keys.withColumn("mkey2", stripArticle(col("mkey")))
-
-    // tier 1: exact (akey is unique in the registry -> <=1 match per key)
-    val t1 = k.join(alias, col("mkey") === col("akey"), "left")
-    val hit1 = t1.filter(col("canonical_id").isNotNull)
-      .withColumn("link_confidence", lit(1.0))
-    val miss1 = t1.filter(col("canonical_id").isNull)
-      .drop("akey", "canonical_id", "entity_type", "canonical_name")
-
-    // tier 2: article-stripped
-    val t2 = miss1.join(alias, col("mkey2") === col("akey"), "left")
-    val hit2 = t2.filter(col("canonical_id").isNotNull)
-      .withColumn("link_confidence", lit(0.95))
-    val miss2 = t2.filter(col("canonical_id").isNull)
-      .drop("akey", "canonical_id", "entity_type", "canonical_name")
-
-    // tier 3: blocked fuzzy; best candidate per key by (ratio desc,
-    // id asc) — deterministic
-    val cand = miss2.join(
-      alias,
-      substring(col("mkey"), 1, 1) === substring(col("akey"), 1, 1) &&
-        abs(length(col("mkey")) - length(col("akey"))) <= 3,
-      "left")
-      .withColumn("ratio",
-        when(col("akey").isNotNull, ratioUdf(col("mkey"), col("akey"))))
-      .withColumn("fuzzy_ok", col("ratio") >= 0.85)
-    val w = Window.partitionBy("mkey")
-      .orderBy(col("fuzzy_ok").desc_nulls_last, col("ratio").desc_nulls_last,
-        col("canonical_id").asc_nulls_last)
-    val t3 = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .withColumn("matched", col("fuzzy_ok").isNotNull && col("fuzzy_ok"))
-      .select(col("mkey"), col("mkey2"),
-        col("akey"),
-        when(col("matched"), col("canonical_id")).as("canonical_id"),
-        when(col("matched"), col("canonical_name")).as("canonical_name"),
-        when(col("matched"), col("entity_type")).as("entity_type"),
-        when(col("matched"), col("ratio")).as("link_confidence"))
-
-    hit1.unionByName(hit2).unionByName(t3, allowMissingColumns = false)
-      .drop("mkey2")
-  }
-
   /** Link mentions against a seed registry. Adds columns:
     * canonical_id, canonical_name, entity_type, link_confidence, is_new.
     *
-    * The whole lookup cascade is a function of the CLEANED KEY alone, so
-    * it runs over the distinct key table (sub-linear in the corpus — the
-    * same boundedness assumption the CC node set already makes) and the
-    * verdicts are broadcast back onto the mention rows: ONE scan of the
-    * mention table and one map-side join, where the previous three-branch
-    * union re-scanned the mention table (re-deriving the cleanKey
-    * regexes) once per tier and shuffled the unmatched branch through a
-    * per-mention window (round-6; LinkerSpec pins verdict equivalence,
-    * q04/q05 stay oracle-green). Only the per-row pieces — is_new and the
-    * type inference for unlinked mentions, which need label/text — stay
-    * row-level.
+    * One narrow pass: each row's cleaned key `mkey` is looked up in a
+    * broadcast [[LocalLinker]] — the registry is tiny, so there is no
+    * distinct-key shuffle, join or window. This is the same lookup the
+    * fused extraction ([[Triples.fromPassagesFused]]) and the speaker
+    * resolution of the materialization job use; the three-tier broadcast-
+    * join cascade it replaced is kept in the test tree as the reference
+    * LinkerSpec compares this output against, row for row and schema for
+    * schema. Only the per-row pieces — is_new and the type inference for
+    * unlinked mentions, which need label/text — are plain expressions.
     */
   def link(
       spark: SparkSession,
       mentions: DataFrame,
       seeds: Seq[SeedEntity] = Seeds.default): DataFrame = {
-    val alias = broadcast(Seeds.toDf(spark, seeds))
+    val linker = spark.sparkContext.broadcast(new LocalLinker(seeds))
+    val verdict = udf((k: String) => linker.value.lookupKey(k))
     // reuse a pre-materialized key column when the input carries one
     // (Pipeline.mentions stores it with the stage)
     val m =
       if (mentions.columns.contains("mkey")) mentions
       else mentions.withColumn("mkey", cleanKey(col("text")))
-    val verdicts = linkKeys(spark, m.select("mkey").distinct(), alias)
-
-    // exactly one verdict row per distinct key -> inner join attaches
-    // without duplicating or dropping mention rows
-    m.join(broadcast(verdicts.drop("akey")), Seq("mkey"))
+    // column order and types of the reference cascade's key join: mkey
+    // first, the link columns after the mention columns; a row whose key
+    // is null has no verdict there and is dropped here too
+    m.filter(col("mkey").isNotNull)
+      .withColumn("verdict__", verdict(col("mkey")))
+      .select((col("mkey") +: m.columns.toSeq.filter(_ != "mkey").map(col)) ++
+        Seq(col("verdict__._1").as("canonical_id"),
+          col("verdict__._2").as("entity_type"),
+          col("verdict__._3").as("canonical_name"),
+          col("verdict__._4").as("link_confidence")): _*)
       .withColumn("is_new", col("canonical_id").isNull)
       .withColumn("entity_type",
         when(col("is_new"), inferType(col("label"), col("text")))

@@ -1,10 +1,11 @@
 package graft.extract
 
-/** In-process seed lookup with EXACTLY the Linker join-cascade semantics
-  * (exact 1.0 -> article-strip 0.95 -> blocked fuzzy >= 0.85, best by
-  * (ratio desc, id asc)). Used inside fused mapPartitions stages where a
-  * broadcast-join would force a shuffle barrier; LinkerSpec asserts the
-  * two implementations agree key-for-key.
+/** In-process seed lookup: the three [[Linker]] tiers (exact 1.0 ->
+  * article-strip 0.95 -> blocked fuzzy >= 0.85, best by (ratio desc, id
+  * asc)). Broadcast into every linking site — the linked stage
+  * ([[Linker.link]]), the fused extraction and speaker resolution;
+  * LinkerSpec asserts it agrees key-for-key with the reference join
+  * cascade.
   */
 final class LocalLinker(seeds: Seq[SeedEntity]) extends Serializable {
 
@@ -66,8 +67,11 @@ final class LocalLinker(seeds: Seq[SeedEntity]) extends Serializable {
     else k
 
   /** Returns (canonical_id, entity_type, canonical_name, confidence). */
-  def lookup(text: String): Option[(String, String, String, Double)] = {
-    val k = cleanKey(text)
+  def lookup(text: String): Option[(String, String, String, Double)] =
+    lookupKey(cleanKey(text))
+
+  /** [[lookup]] of an already-cleaned key (Linker.cleanKey's output). */
+  def lookupKey(k: String): Option[(String, String, String, Double)] = {
     if (k.isEmpty) return None
     index.get(k).map { case (id, t, n) => (id, t, n, 1.0) }
       .orElse {

@@ -286,8 +286,8 @@ object Triples {
   /** FUSED hot path: detection + SVO extraction + broadcast-index linking
     * in ONE narrow mapPartitions over passages — zero shuffles before the
     * edge aggregate. This is the 100 TB shape: scan -> narrow extract ->
-    * partial-agg. Linking semantics are identical to the join-cascade
-    * Linker (LocalLinker; asserted by LinkerSpec).
+    * partial-agg. Linking is the broadcast LocalLinker lookup that
+    * Linker.link also runs.
     */
   def fromPassagesFused(
       spark: SparkSession,

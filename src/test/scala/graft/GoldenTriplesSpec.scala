@@ -65,4 +65,18 @@ class GoldenTriplesSpec extends SparkSpec {
     // on the synthetic corpus the pipeline is exact
     assert(precision == 1.0 && recall == 1.0)
   }
+
+  test("linked stage: Linker.link == the reference join cascade, " +
+    "row for row, same schema") {
+    // the session's mention stage carries the stored mkey; the
+    // materialization job's mention stage does not
+    val stage = Pipeline.mentions(spark, sf)
+    for (mentions <- Seq(stage, stage.drop("mkey"))) {
+      val got = graft.extract.Linker.link(spark, mentions)
+      val want = graft.extract.CascadeLinker.link(spark, mentions)
+      assert(got.schema == want.schema, s"${got.schema} != ${want.schema}")
+      assert(want.count() > 0)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+  }
 }

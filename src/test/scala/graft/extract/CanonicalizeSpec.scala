@@ -115,14 +115,14 @@ class CanonicalizeSpec extends SparkSpec {
     import spark.implicits._
     val nodes = Seq("a", "b", "c", "d", "e", "f").toDF("node")
     val edges = Seq(("c", "b"), ("b", "a"), ("e", "d")).toDF("src", "dst")
-    val (assign, steps) = ConnectedComponents.run(spark, nodes, edges)
+    val (assign, steps) = ConnectedComponents.supersteps(spark, nodes, edges)
     val m = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("a" -> "a", "b" -> "a", "c" -> "a",
       "d" -> "d", "e" -> "d", "f" -> "f"))
     assert(steps.last.changed == 0)
     // reversed edge orientation must give the same result
     val edges2 = Seq(("a", "b"), ("b", "c"), ("d", "e")).toDF("src", "dst")
-    val (assign2, _) = ConnectedComponents.run(spark, nodes, edges2)
+    val (assign2, _) = ConnectedComponents.supersteps(spark, nodes, edges2)
     val m2 = assign2.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m2 == m)
   }
@@ -136,7 +136,7 @@ class CanonicalizeSpec extends SparkSpec {
     val names = (0 to 1024).map(i => f"n$i%05d")
     val nodes = names.toDF("node")
     val edges = names.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
-    val (assign, steps) = ConnectedComponents.run(spark, nodes, edges)
+    val (assign, steps) = ConnectedComponents.supersteps(spark, nodes, edges)
     // log2(1024) halving steps + one final no-change detection step
     assert(steps.size <= 12, s"took ${steps.size} supersteps")
     val clusters = assign.select("cluster").distinct().as[String].collect()
@@ -165,10 +165,17 @@ class CanonicalizeSpec extends SparkSpec {
       }
       val expected = nodes.groupBy(find).values
         .flatMap(g => g.map(_ -> g.min)).toMap
-      val (assign, _) = ConnectedComponents.run(spark,
+      // run (size-selected), the driver union-find and the supersteps
+      val (viaRun, _) = ConnectedComponents.run(spark,
         nodes.toDF("node"), edges.toDF("src", "dst"))
-      val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(got == expected, s"trial $trial (n=$n, e=${edges.size})")
+      val viaLocal = ConnectedComponents.local(spark, nodes.toDF("node"), edges)
+      val (viaSteps, _) = ConnectedComponents.supersteps(spark,
+        nodes.toDF("node"), edges.toDF("src", "dst"))
+      for ((impl, assign) <- Seq("run" -> viaRun, "local" -> viaLocal,
+          "supersteps" -> viaSteps)) {
+        val got = assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(got == expected, s"$impl, trial $trial (n=$n, e=${edges.size})")
+      }
     }
   }
 
@@ -177,7 +184,7 @@ class CanonicalizeSpec extends SparkSpec {
     val nodes = Seq("a", "b").toDF("node")
     val edges = Seq(("a", "b")).toDF("src", "dst")
     val e = intercept[IllegalStateException] {
-      ConnectedComponents.run(spark, nodes, edges, maxIter = 0)
+      ConnectedComponents.supersteps(spark, nodes, edges, maxIter = 0)
     }
     assert(e.getMessage.contains("raise maxIter"))
   }
@@ -185,10 +192,20 @@ class CanonicalizeSpec extends SparkSpec {
   test("connected components: empty node set converges to empty assignment") {
     import spark.implicits._
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
-    val (assign, steps) = ConnectedComponents.run(spark,
+    val (assign, steps) = ConnectedComponents.supersteps(spark,
       Seq.empty[String].toDF("node"), empty)
     assert(assign.count() == 0)
     assert(steps.head.changed == 0) // fused metrics must not NPE on NULL sum
+  }
+
+  test("connected components: a small graph runs on the driver, no supersteps") {
+    import spark.implicits._
+    val nodes = Seq("a", "b", "c").toDF("node")
+    val edges = Seq(("b", "c")).toDF("src", "dst")
+    val (assign, steps) = ConnectedComponents.run(spark, nodes, edges)
+    assert(steps.isEmpty)
+    assert(assign.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "b", "c" -> "b"))
   }
 
   test("cooccurrence counts pairs per passage without self-join") {

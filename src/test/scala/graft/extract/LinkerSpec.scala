@@ -96,7 +96,7 @@ class LinkerSpec extends SparkSpec {
         ("d", 0, "p", t, i * 100, i * 100 + t.length, "PERSON", "heuristic", 0.7)
       }.toDF("doc_id", "pos", "passage_id", "text", "start", "end",
         "label", "source", "confidence")
-      Linker.link(spark, m, fixtureSeeds)
+      CascadeLinker.link(spark, m, fixtureSeeds)
         .select("text", "canonical_id", "link_confidence")
         .collect().map(r => r.getString(0) ->
           ((Option(r.getString(1)), r.getDouble(2)))).toMap
